@@ -3,50 +3,45 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The reference's four-step cleaning chain, column-wise and codegen'd.
+import graft.functions.CleanExpressions.cleanField
+
+/** The reference's four-step cleaning chain as one projection.
   *
   * Reference order (`code/beam.py:111-121`) is semantically order-sensitive
   * and preserved exactly:
   *
   *   T1 `remove_last_colon` — strip exactly ONE trailing `:` from `items`
-  *      (reference `code/beam.py:35-39`). `regexp_replace(items, ":$", "")`,
-  *      not rtrim (which would strip runs).
+  *      (reference `code/beam.py:35-39`, `endswith(':')`; not rtrim, which
+  *      would strip runs, and not a regex `:$`, which also matches before a
+  *      final line separator such as U+2028 or U+0085).
   *   T2 lowercase — the reference lowercases the ENTIRE row string
-  *      (`code/beam.py:118`); per-column `lower` is equivalent because `,`
-  *      is case-invariant, and vectorizes.
+  *      (`code/beam.py:118`); per-field lowercase is equivalent because `,`
+  *      is case-invariant.
   *   T3 `remove_special_characters` — delete `[?%&]` from every field
-  *      (`code/beam.py:42-45`). Runs AFTER lowercase, so e.g. `Marga?ritA`
-  *      → `marga?rita` → `margarita` and `delivered?` routes to the
-  *      delivered branch.
+  *      (`code/beam.py:42-45`), so `Marga?ritA` → `margarita` and
+  *      `delivered?` routes to the delivered branch.
   *   T4 append constant `new_col = "1"` (`code/beam.py:120`) — added after
   *      T3, so it is never itself cleaned.
   *
-  * Malformed rows (fewer than the full field count) are dropped — the intent
-  * of the deployed guard at `code/beam.py:50-51` (the reference actually
-  * leaks `None` into the sink; we implement the intent, see SURVEY §2.1).
+  * T1–T3 run per field in [[graft.functions.CleanField]], one pass over the
+  * field's UTF-8 bytes. T1 looks at the raw last byte, before T3 deletes
+  * anything, so `abc:?` keeps its colon (T1 sees `?` last) and `abc?:`
+  * becomes `abc`, as in the reference. ASCII fields take a byte-wise fast
+  * path; a field with any non-ASCII byte is lowercased exactly as Spark's
+  * `lower` does, then stripped of `?%&`.
   *
-  * Everything here is a built-in Catalyst expression: the whole chain fuses
-  * into one WholeStageCodegen stage over the scan — zero shuffles, scales
-  * linearly with input splits.
+  * Malformed rows (fewer than the full field count) are dropped first — the
+  * intent of the deployed guard at `code/beam.py:50-51` (the reference
+  * actually leaks `None` into the sink; we implement the intent, see
+  * SURVEY §2.1). Cleaning keeps null and non-null apart, so dropping before
+  * or after it selects the same rows.
+  *
+  * The clean is one `select` of native expressions: it fuses into the
+  * scan's whole-stage codegen stage — zero shuffles, linear in the input
+  * splits. Batch ([[FoodOrdersJob]]) and stream share it, as does any frame
+  * of the 11 raw columns.
   */
 object Clean {
-
-  /** T1: strip exactly one trailing colon from the packed `items` list. */
-  def removeLastColon(df: DataFrame): DataFrame =
-    df.withColumn("items", regexp_replace(col("items"), ":$", ""))
-
-  /** T2: lowercase every column (whole-row lowercase in the reference). */
-  def lowercaseAll(df: DataFrame): DataFrame =
-    df.columns.foldLeft(df)((d, c) => d.withColumn(c, lower(col(c))))
-
-  /** T3: delete `?`, `%`, `&` from every column. */
-  def removeSpecialCharacters(df: DataFrame): DataFrame =
-    df.columns.foldLeft(df)((d, c) =>
-      d.withColumn(c, regexp_replace(col(c), "[?%&]", "")))
-
-  /** T4: append the constant marker column. */
-  def addConstantColumn(df: DataFrame): DataFrame =
-    df.withColumn("new_col", lit("1"))
 
   /** Drop rows that did not carry all physical fields (the reference's
     * `<12 fields after T4` guard, `code/beam.py:50-51`). [[Ingest]] retains
@@ -60,12 +55,10 @@ object Clean {
     else
       df.filter(col(FoodSchema.rawColumns.last).isNotNull)
 
-  /** Full chain in reference order: T1 → T2 → T3 → T4, then malformed-row
-    * drop, projected to the declared 12-column output order. */
-  def apply(df: DataFrame): DataFrame = {
-    val cleaned = addConstantColumn(
-      removeSpecialCharacters(lowercaseAll(removeLastColon(df))))
-    dropMalformed(cleaned)
-      .select(FoodSchema.outputColumns.map(col): _*)
-  }
+  /** Malformed-row drop, then T1 → T2 → T3 per field and T4, projected to
+    * the declared 12-column output order. */
+  def apply(df: DataFrame): DataFrame =
+    dropMalformed(df).select(FoodSchema.rawColumns.map(c =>
+      cleanField(col(c), stripColon = c == "items").as(c)) :+
+      lit("1").as("new_col"): _*)
 }

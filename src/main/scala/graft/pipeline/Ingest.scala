@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (reference `code/beam.py:113-116`, split at `:36,:44,:126`). We reproduce
   * that literally: lines are read whole (a separator that can't occur keeps
   * Spark's CSV reader to one column while still skipping one header line per
-  * file), then split on bare commas with trailing empties preserved.
+  * file), then split on bare commas with trailing empties preserved. A
+  * field the line does not have reads as null (`get`, not `getItem`, which
+  * throws `INVALID_ARRAY_INDEX` under ANSI mode), so the parse is total on
+  * its own, whatever runs after it.
   *
   * Doing our own split is not just fidelity — it is the only way to keep the
   * reference's malformed-row semantics: Spark's CSV parser maps BOTH an
@@ -44,7 +47,7 @@ object Ingest {
   def parseLines(lines: DataFrame): DataFrame = {
     val parts = split(col("line"), ",", -1)   // limit -1 keeps trailing ""
     val fields = FoodSchema.rawColumns.zipWithIndex.map { case (c, i) =>
-      parts.getItem(i).as(c)
+      get(parts, lit(i)).as(c)
     }
     lines.select(fields :+ size(parts).as(NFieldsCol): _*)
   }

@@ -3,12 +3,15 @@ package graft.pipeline
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 
 import graft.SparkTestBase
 
-/** ScalaCheck properties of the cleaning chain (SURVEY §5): idempotence,
-  * the partition law of the split, and the T1 single-colon contract —
-  * checked on generated rows, not just the fixture. */
+/** ScalaCheck properties of the cleaning chain (SURVEY §5): agreement of
+  * the native kernel with the built-in [[CleanReference]] chain (codegen'd
+  * and interpreted), idempotence, the partition law of the split, and the
+  * T1 single-colon contract — checked on generated rows, not just the
+  * fixture. */
 object CleanPropertySpec extends Properties("Clean") {
   private lazy val spark = SparkTestBase.session
   import Prop.{forAllNoShrink => forAll}
@@ -20,10 +23,65 @@ object CleanPropertySpec extends Properties("Clean") {
 
   private val rowGen: Gen[Seq[String]] = Gen.listOfN(11, fieldGen)
 
+  // Non-ASCII (É, İ, ß, Σ — İ lowercases to two code points, a final Σ to ς),
+  // line separators T1 must not look past, and the T1/T3 order traps.
+  private val agreeChar: Gen[Char] = Gen.frequency(
+    6 -> Gen.alphaNumChar,
+    3 -> Gen.oneOf('?', '%', '&', ':', ' '),
+    2 -> Gen.oneOf('\u00C9', '\u0130', '\u00DF', '\u03A3', '\u2028',
+      '\u0085', '\r'))
+
+  private val agreeField: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(""),
+    2 -> Gen.oneOf("::", "abc:?", "abc?:", "pizza:\u2028", "A\u03A3?B:"),
+    8 -> Gen.listOf(agreeChar).map(_.take(10).mkString))
+
+  private val agreeRowGen: Gen[Seq[String]] = Gen.listOfN(11, agreeField)
+
   private def toDf(rows: Seq[Seq[String]]) =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(r: _*)), 2),
       FoodSchema.raw)
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def row(items: String): Seq[String] =
+    Seq("c1", "1/1/2024", "1.2.3", "o1", items, "10", "card", "r1",
+      "Delivered", "5", "ok")
+
+  private def cleanItems(items: String): String =
+    Clean(toDf(Seq(row(items)))).select("items").head().getString(0)
+
+  property("native kernel agrees with the built-in reference chain") =
+    forAll(Gen.nonEmptyListOf(agreeRowGen)) { rows =>
+      val df = toDf(rows.take(8))
+      val (got, want) = (Clean(df).collect().toSeq,
+        CleanReference(df).collect().toSeq)
+      (got == want) :| s"kernel $got != reference $want"
+    }
+
+  property("codegen'd and interpreted kernels agree") =
+    forAll(Gen.nonEmptyListOf(agreeRowGen)) { rows =>
+      val df = toDf(rows.take(8))
+      val codegen = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(
+        Clean(df).collect().toSeq)
+      val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(
+        Clean(df).collect().toSeq)
+      (codegen == interpreted) :| s"codegen $codegen != interpreted $interpreted"
+    }
+
+  // the reference's T1 is `endswith(':')` on the raw field, before T3
+  property("T1 sees the raw last character") = Prop(
+    cleanItems("abc:?") == "abc:" && cleanItems("abc?:") == "abc" &&
+      cleanItems("pizza:\u2028") == "pizza:\u2028" &&
+      cleanItems("::") == ":" && cleanItems("") == "")
 
   // NOTE deliberately NOT claimed: full-chain idempotence. T1 strips exactly
   // one trailing colon per application (reference `code/beam.py:37-38`), so
@@ -33,7 +91,8 @@ object CleanPropertySpec extends Properties("Clean") {
   property("lowercase+specialchar steps are idempotent") =
     forAll(Gen.nonEmptyListOf(rowGen)) { rows =>
       val once = Clean(toDf(rows.take(6)))
-      val twice = Clean.removeSpecialCharacters(Clean.lowercaseAll(once))
+      val twice = CleanReference.removeSpecialCharacters(
+        CleanReference.lowercaseAll(once))
       once.exceptAll(
         twice.select(FoodSchema.outputColumns.map(col): _*)).count() == 0
     }

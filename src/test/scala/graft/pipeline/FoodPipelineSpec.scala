@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.SparkTestBase
 
@@ -71,8 +72,8 @@ class FoodPipelineSpec extends SparkTestBase {
 
   test("cleaning is idempotent on its own output columns") {
     val once = cleaned
-    val twice = Clean.removeSpecialCharacters(
-      Clean.lowercaseAll(Clean.removeLastColon(once)))
+    val twice = CleanReference.removeSpecialCharacters(
+      CleanReference.lowercaseAll(CleanReference.removeLastColon(once)))
     assert(once.exceptAll(twice.select(FoodSchema.outputColumns.map(col): _*))
       .count() === 0)
   }
@@ -151,5 +152,36 @@ class FoodPipelineSpec extends SparkTestBase {
     assert(del.count() === 1)
     assert(oth.count() === 1)
     assert(oth.select("status").head().getString(0) === "on hold")
+  }
+
+  private def shortRowFile(): String = {
+    val f = Files.createTempFile("shortrow", ".csv")
+    Files.writeString(f,
+      "Customer_id,date,time,order_id,items,amount,mode,restaurnt,Status,ratings,feedback\n" +
+        "C1,1/1/2024,1.2.3,O1,a:,10,Card,R1,Delivered,5,ok\n" +
+        "C2,1/1/2024,1.2.3,O2,b:,10,Card,R1,Delivered,4\n")
+    f.toString
+  }
+
+  test("readRaw alone is total under ANSI: a missing field reads as null") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val raw = Ingest.readRaw(spark, shortRowFile())
+    raw.write.format("noop").mode("overwrite").save()
+    val byId = raw.collect().map(r => r.getAs[String]("customer_id") -> r).toMap
+    assert(byId("C1").getAs[String]("feedback") === "ok")
+    assert(byId("C1").getAs[Int](Ingest.NFieldsCol) === 11)
+    assert(byId("C2").isNullAt(byId("C2").fieldIndex("feedback")))
+    assert(byId("C2").getAs[String]("ratings") === "4")
+    assert(byId("C2").getAs[Int](Ingest.NFieldsCol) === 10)
+  }
+
+  test("Clean applies no string function to the integer field count") {
+    val plan = Clean(Ingest.readRaw(spark, shortRowFile()))
+      .queryExecution.analyzed
+    val overCount = plan.flatMap(_.expressions).flatMap(_.collect {
+      case e if e.dataType.isInstanceOf[StringType] &&
+        e.references.exists(_.name == Ingest.NFieldsCol) => e
+    })
+    assert(overCount.isEmpty, overCount.mkString("\n"))
   }
 }
